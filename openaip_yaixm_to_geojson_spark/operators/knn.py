@@ -10,29 +10,36 @@ reproduces them bit-for-bit (trig-free):
   long straight edge can get an overstated distance (r3 VERDICT item).
 * EDGE distance (`knn_edge_*`): exact squared point-to-segment distance
   (projection clamped to [0,1], every op a single-rounded IEEE double in a
-  fixed order shared by the Spark expression, the NumPy fallback and the
-  SQL oracle) — what "nearest airspace" users expect.
+  fixed order shared by the Spark expression, the NumPy scan and the SQL
+  oracle) — what "nearest airspace" users expect.
 
-Implementations:
+Every polygon entry point (vertex or edge, driver list or polygons table,
+k = 1 or k) is a thin wrapper over four shared pieces; a metric (`_VERTEX`,
+`_EDGE`) supplies only the index payload columns, the d2 kernel and the
+finalization margin:
 
-* `knn_ring_expansion` / `knn_edge_ring_expansion` — the scale path. Index
-  points (ring vertices, or segment sample points carrying their segment's
-  endpoints) are bucketed by grid cell; each round joins still-unmatched
-  pages against the index expanded to a Chebyshev window, takes the best
-  candidate (for edges: the EXACT segment distance — sampling only drives
-  candidate generation, never the reported distance), and finalizes pages
-  whose best distance beats anything an unseen ring could hold. Each round
-  is one broadcast/shuffle join + one aggregation on the shrinking
-  unmatched set.
-
-* `knn_bruteforce` / `knn_edge_bruteforce` — vectorized NumPy baselines
-  (points x index rows per Arrow batch). Oracle cross-check + tail
-  fallback + tiny-input fast path.
+* `_index_from_table` — the index: (vcell, poly_id, *payload) rows built
+  from a polygons TABLE by codegen expressions (a driver list becomes a
+  table first). Index points are ring vertices, or segment sample points
+  carrying their segment's endpoints.
+* `_expansion_loop_k` — each round joins still-unresolved pages against
+  the index expanded to a Chebyshev window, keeps the k best DISTINCT
+  polygons (for edges: by the EXACT segment distance — sampling only
+  drives candidate generation, never the reported distance), and
+  finalizes pages whose k-th distance beats anything an unseen ring could
+  hold. k = 1 is the same loop projected to (url, lat, lon, poly_id,
+  dist_sq).
+* `_nearest_scan` — vectorized NumPy exact nearest scan (points x index
+  rows per Arrow batch): `knn_bruteforce` / `knn_edge_bruteforce`, the
+  tiny-input fast path and the driver-list k = 1 fallback.
+* `_bruteforce_k` — distributed exact top-k scan over the index TABLE:
+  the table fast path and every other fallback.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from functools import reduce
+from typing import Any, Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -43,334 +50,43 @@ from pyspark.sql import types as T
 from ..functions import cellgrid
 from ..plans.localtable import literal_table
 
-KNN_RES = 9  # ~0.7 deg cells for the vertex index
+KNN_RES = 9  # ~0.7 deg cells for the polygon index
+KNN_POINTS_RES = 6  # ~5.6 deg cells — sized for geotag density
+# Chebyshev ring windows, one driver round each: every round is a full
+# barrier (join + agg + checkpoint), so fewer/wider windows win whenever
+# the expanded index stays joinable — ((0,1),(2,15)) measured ~1.5x faster
+# than four geometric windows at bench scale with identical output
+WINDOWS = ((0, 1), (2, 15))
 OUT_COLS = ("url", "lat", "lon", "poly_id", "dist_sq")
-# vertex-index rows (vertices x window offsets) past this are shuffle-joined
-# on `cell` instead of broadcast: building + shipping a multi-hundred-MB
-# broadcast relation costs more than shuffling the (shrunken) pending side
-# (measured ~20% on the wide round at bench scale)
+KNN_K_OUT_COLS = ("url", "rnk", "poly_id", "dist_sq")
+# expanded-index rows (index rows x window offsets) past this are
+# shuffle-joined on `cell` instead of broadcast: building + shipping a
+# multi-hundred-MB broadcast relation costs more than shuffling the
+# (shrunken) pending side (measured ~20% on the wide round at bench scale)
 BROADCAST_INDEX_MAX_ROWS = 500_000
-# brute-force fallback: vertices scanned per inner chunk so each Arrow batch
-# allocates O(batch_rows x chunk) instead of O(batch_rows x all_vertices)
+# NumPy scan: index rows scanned per inner chunk so each Arrow batch
+# allocates O(batch_rows x chunk) instead of O(batch_rows x all_rows)
 BRUTEFORCE_CHUNK = 4096
-
-
-def _vertex_arrays(polygons: list[dict[str, Any]]):
-    pids, vx, vy = [], [], []
-    for poly in polygons:
-        ring = np.asarray(poly["ring"], dtype=np.float64)[:-1]  # closing dup excluded
-        pids.append(np.full(len(ring), int(poly["poly_id"]), dtype=np.int64))
-        vx.append(ring[:, 0])
-        vy.append(ring[:, 1])
-    return np.concatenate(pids), np.concatenate(vx), np.concatenate(vy)
-
-
-def knn_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
-    """(url, nearest poly_id, dist_sq) by exact scan over all vertices —
-    vectorized per Arrow batch; ties break to the smaller poly_id."""
-    pids, vx, vy = _vertex_arrays(polygons)
-    order = np.lexsort((pids,))  # stable: ties resolved to smallest poly_id
-    pids, vx, vy = pids[order], vx[order], vy[order]
-
-    result_type = T.StructType(
-        [
-            T.StructField("poly_id", T.IntegerType()),
-            T.StructField("dist_sq", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(result_type)
-    def nearest(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lon_np = lon.to_numpy(dtype=np.float64)[:, None]
-        lat_np = lat.to_numpy(dtype=np.float64)[:, None]
-        n = len(lon_np)
-        # scan vertices in pid-sorted chunks: per-batch memory stays
-        # O(batch_rows x BRUTEFORCE_CHUNK) however many vertices exist.
-        # argmin's first-occurrence rule on the pid-sorted array + the
-        # strict `<` merge give the smallest-poly_id tie-break (matches the
-        # SQL oracle's row_number ordered by dist_sq, poly_id).
-        best = np.full(n, np.inf)
-        best_pid = np.full(n, -1, dtype=np.int64)
-        for s in range(0, len(vx), BRUTEFORCE_CHUNK):
-            cx, cy, cp = vx[s : s + BRUTEFORCE_CHUNK], vy[s : s + BRUTEFORCE_CHUNK], pids[s : s + BRUTEFORCE_CHUNK]
-            dx = lon_np - cx[None, :]
-            dy = lat_np - cy[None, :]
-            d2 = dx * dx + dy * dy
-            idx = d2.argmin(axis=1)
-            dmin = d2[np.arange(n), idx]
-            take = dmin < best
-            best[take] = dmin[take]
-            best_pid[take] = cp[idx[take]]
-        return pd.DataFrame({"poly_id": best_pid.astype("int32"), "dist_sq": best})
-
-    return pages.select(
-        "url", "lat", "lon", nearest(F.col("lon"), F.col("lat")).alias("_nn")
-    ).select("url", "lat", "lon", F.col("_nn.poly_id").alias("poly_id"), F.col("_nn.dist_sq").alias("dist_sq"))
-
-
-def vertex_index_df(spark: SparkSession, polygons: list[dict[str, Any]], res: int = KNN_RES) -> DataFrame:
-    """Polygon vertices indexed by grid cell (the small broadcast side)."""
-    pids, vx, vy = _vertex_arrays(polygons)
-    cells = cellgrid.encode_np(vx, vy, res)
-    pdf = pd.DataFrame({"vcell": cells, "poly_id": pids.astype("int32"), "vlon": vx, "vlat": vy})
-    # Explicit schema: without it the inferred dtype of poly_id depends on
-    # spark.sql.execution.arrow.pyspark.enabled (arrow keeps int32, the
-    # non-arrow fallback widens to bigint), and _topk_distinct_pid's fold
-    # zero literal hard-codes poly_id:int — a vanilla default session would
-    # raise DATATYPE_MISMATCH.ARRAY_FUNCTION_DIFF_TYPES (round-5 driver red).
-    return spark.createDataFrame(pdf, "vcell bigint, poly_id int, vlon double, vlat double")
-
-
-def vertex_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataFrame:
-    """Distributed vertex index from a polygons TABLE: explode the ring
-    column (closing duplicate dropped), encode cells with the codegen cell
-    expression — no UDF, no driver materialization, so the polygon side can
-    be millions of rows (the same scale fix spatial_join_distributed made
-    for the cover)."""
-    pts = polygons_df.select(
-        F.col("poly_id").cast("int").alias("poly_id"),
-        F.explode(F.slice(F.col("ring"), F.lit(1), F.size(F.col("ring")) - 1)).alias("pt"),
-    ).select(
-        "poly_id",
-        F.col("pt")[0].alias("vlon"),
-        F.col("pt")[1].alias("vlat"),
-    )
-    return pts.select(
-        cellgrid.cell_id_col(F.col("vlon"), F.col("vlat"), res).alias("vcell"),
-        "poly_id",
-        "vlon",
-        "vlat",
-    )
-
-
-def knn_bruteforce_distributed(pages: DataFrame, vindex: DataFrame) -> DataFrame:
-    """Exact nearest-vertex scan with the vertex side as a TABLE: broadcast
-    the (small) page tail against every vertex partition, then one min-by
-    aggregation. Used as the ring-expansion fallback when polygons are a
-    DataFrame; O(tail x vertices) work data-parallel over the vertex set."""
-    tail = pages.select("url", "lat", "lon")
-    d2 = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-        F.col("lat") - F.col("vlat")
-    ) * (F.col("lat") - F.col("vlat"))
-    return (
-        vindex.crossJoin(F.broadcast(tail))
-        .select("url", "lat", "lon", "poly_id", d2.alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.first("lat").alias("lat"),
-            F.first("lon").alias("lon"),
-            F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"),
-        )
-        .select(
-            "url",
-            "lat",
-            "lon",
-            F.col("_b.poly_id").alias("poly_id"),
-            F.col("_b.d2").alias("dist_sq"),
-        )
-    )
-
-
-# fast-path gates: below these, the exact vectorized scan beats the
-# expansion loop's 2+ driver barriers. The page-count probe uses
-# limit(N+1).count() — a CollectLimit that early-exits after N+1 rows, so
-# the gate costs O(threshold) regardless of table size (a full count()
-# here would add a whole-table job at 100 TB).
+# fast-path gates: below these, the exact scan beats the expansion loop's
+# 2+ driver barriers. The page-count probe uses limit(N+1).count() — a
+# CollectLimit that early-exits after N+1 rows, so the gate costs
+# O(threshold) regardless of table size (a full count() here would add a
+# whole-table job at 100 TB).
 SMALL_INPUT_ROWS = 100_000
 SMALL_INDEX_VERTICES = 10_000
 
-
-def knn_ring_expansion(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-    small_input_rows: int = SMALL_INPUT_ROWS,
-) -> DataFrame:
-    """(url, poly_id, dist_sq) via iterative cell-ring expansion.
-
-    Round r joins still-unfinalized pages against the vertex index over the
-    Chebyshev ring WINDOW [lo_r, hi_r] (the index side explodes across the
-    window's offsets — the page side stays one row per page with a plain
-    equi-join). Pages finalize once the guarantee (hi_r * size)^2 >= best
-    dist_sq holds (an unseen vertex in ring > hi_r is at least hi_r * size
-    away). Pages with nothing inside the last window fall back to the exact
-    vectorized scan.
-
-    Window schedule: every driver round is a full barrier (join + agg +
-    checkpoint), so fewer/wider windows win whenever the expanded index
-    stays joinable — the default ((0,1),(2,15)) measured ~1.5x faster than
-    four geometric windows at bench scale with identical output. For very
-    dense vertex sets, more geometric windows bound per-round candidate
-    fan-out; past BROADCAST_INDEX_MAX_ROWS the wide round shuffle-joins
-    instead of broadcasting either way.
-    """
-    spark = pages.sparkSession
-    n_vertices = sum(len(p["ring"]) - 1 for p in polygons)
-
-    # tiny-input fast path: same rows (knn_bruteforce shares the tie-break
-    # contract and is gate-verified against the same oracle), no loop
-    # barriers. Set small_input_rows=0 to force the expansion path.
-    if small_input_rows and n_vertices <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(small_input_rows + 1).count()
-        if probe <= small_input_rows:
-            return knn_bruteforce(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    vindex = vertex_index_df(spark, polygons, res)
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_bruteforce(tail.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    return _expansion_loop(pages, vindex, n_vertices, res, windows, fallback)
-
-
-def knn_ring_expansion_table(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """Ring-expansion kNN with the polygon side as a TABLE end to end: the
-    vertex index is built by a distributed explode + codegen cell encode
-    (vertex_index_from_table) and the exact-fallback tail scans the vertex
-    TABLE (knn_bruteforce_distributed) — nothing polygon-shaped touches the
-    driver, so the polygon side scales to millions of rows. Same rows as
-    `knn_ring_expansion` (tie-break and guarantee logic shared)."""
-    # coalesce before checkpointing: the vertex index inherits the polygons
-    # table's partitioning, which can be far wider than the index warrants
-    # (a 64-part polygons scan would otherwise spawn 64 near-empty tasks in
-    # EVERY expansion round); capping at defaultParallelism keeps rounds at
-    # cluster width without a shuffle
-    vindex = (
-        vertex_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_vertices = vindex.count()  # tiny job on the (small) vertex table
-
-    # same tiny-input fast path as the driver-list variant
-    if n_vertices <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(SMALL_INPUT_ROWS + 1).count()
-        if probe <= SMALL_INPUT_ROWS:
-            return knn_bruteforce_distributed(pages, vindex).select(*OUT_COLS)
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_bruteforce_distributed(tail, vindex).select(*OUT_COLS)
-
-    return _expansion_loop(pages, vindex, n_vertices, res, windows, fallback)
-
-
-def _expansion_loop(
-    pages: DataFrame,
-    vindex: DataFrame,
-    n_vertices: int,
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    fallback,
-    payload_cols: tuple[str, ...] = ("vlon", "vlat"),
-    d2_expr: Column | None = None,
-    bound_margin: float = 0.0,
-) -> DataFrame:
-    """Shared ring-expansion driver loop (see knn_ring_expansion docstring):
-    vindex is (vcell, poly_id, *payload_cols) from either the driver-list
-    or the distributed table builder; `fallback(tail)` performs the exact
-    scan for pages unresolved past the last window.
-
-    `d2_expr` computes the candidate distance from (lon, lat, payload) —
-    default is squared distance to the (vlon, vlat) index point itself.
-    `bound_margin` (in cell units) relaxes the finalization guarantee for
-    indexes whose rows SAMPLE an extended object: with segment samples at
-    Euclidean spacing <= cell_size, an unseen segment (no sample inside
-    Chebyshev ring hi) can still pass within (hi - 1/2) * cell_size of the
-    page — every segment point is within spacing/2 of some sample — so the
-    guarantee becomes dist_sq <= ((hi - margin) * size)^2 with margin 0.5."""
-    spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
-    if d2_expr is None:
-        d2_expr = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-            F.col("lat") - F.col("vlat")
-        ) * (F.col("lat") - F.col("vlat"))
-
-    pending = (
-        pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-        .withColumn("poly_id", F.lit(None).cast("int"))
-        .withColumn("dist_sq", F.lit(None).cast("double"))
-    )
-    finalized: list[DataFrame] = []
-
-    for lo, hi in windows:
-        # Expand the SMALL side: every vertex is registered under each cell
-        # in the window's Chebyshev annulus, so the page side stays one row
-        # per page with a plain equi-join (no fact-side explode). Window
-        # (8,15) x ~1k vertices is still well under broadcast thresholds;
-        # beyond broadcast scale this becomes a shuffle join on cell.
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
-        vwin = vindex.crossJoin(off_df).select(
-            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *payload_cols
-        )
-        # expanded index = vertices x |window annulus|; broadcast only while
-        # that stays genuinely small, else shuffle-join on the cell key
-        if n_vertices * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
-            vwin = F.broadcast(vwin)
-        cand = (
-            pending.select("url", "lat", "lon", "cell")
-            .join(vwin, "cell")
-            .withColumn("d2", d2_expr)
-            .groupBy("url")
-            .agg(F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"))
-            .select("url", F.col("_b.poly_id").alias("c_pid"), F.col("_b.d2").alias("c_d2"))
-        )
-        cand_better = F.col("c_d2").isNotNull() & (
-            F.col("dist_sq").isNull()
-            | (F.col("c_d2") < F.col("dist_sq"))
-            | ((F.col("c_d2") == F.col("dist_sq")) & (F.col("c_pid") < F.col("poly_id")))
-        )
-        merged = pending.join(cand, "url", "left").select(
-            "url",
-            "lat",
-            "lon",
-            "cell",
-            F.when(cand_better, F.col("c_pid")).otherwise(F.col("poly_id")).alias("poly_id"),
-            F.when(cand_better, F.col("c_d2")).otherwise(F.col("dist_sq")).alias("dist_sq"),
-        )
-        # finalize once nothing in an unseen ring (>= hi+1) can be closer:
-        # any indexed point there is at least hi*size away in Chebyshev
-        # terms (minus the sampling margin for extended objects).
-        bound = float(((hi - bound_margin) * size) * ((hi - bound_margin) * size))
-        guarantee = F.col("dist_sq").isNotNull() & (F.col("dist_sq") <= F.lit(bound))
-        # normalize to the output schema here: the loop frames carry a
-        # `cell` column that the brute-force fallback frame does not.
-        finalized.append(merged.where(guarantee).select(*OUT_COLS))
-        pending = merged.where(~guarantee | F.col("dist_sq").isNull()).localCheckpoint()
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None and not pending.isEmpty():
-        # pages with nothing within max_rounds rings: exact fallback scan
-        finalized.append(fallback(pending))
-
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
+_BEST_T = "array<struct<d2:double,poly_id:int>>"
+_NEAREST_T = T.StructType(
+    [T.StructField("poly_id", T.IntegerType()), T.StructField("dist_sq", T.DoubleType())]
+)
 
 
 # ---------------------------------------------------------------------------
-# edge-exact kNN: point-to-SEGMENT distance (r3 VERDICT item 2)
+# distance kernels: Spark expression + NumPy twin per metric, same op order
 # ---------------------------------------------------------------------------
 #
-# Shared formulation — the EXACT same op order in the Spark expression, the
-# NumPy kernels and the SQL oracle, so every intermediate is a single-rounded
+# Edge formulation — the EXACT same op order in the Spark expression, the
+# NumPy kernel and the SQL oracle, so every intermediate is a single-rounded
 # IEEE double and results hash-compare bit-for-bit:
 #   dx = bx - ax; dy = by - ay; px = lon - ax; py = lat - ay
 #   dot = px * dx + py * dy;    len2 = dx * dx + dy * dy
@@ -378,6 +94,20 @@ def _expansion_loop(
 #   ex = px - t * dx; ey = py - t * dy;  d2 = ex * ex + ey * ey
 # A degenerate segment (a == b) has len2 = 0 and dot = 0, so t = 0 and d2
 # falls back to the vertex distance — no division ever sees a zero.
+
+
+def _vertex_d2_expr() -> Column:
+    """Squared distance from (lon, lat) to the index vertex (ax, ay)."""
+    dx = F.col("lon") - F.col("ax")
+    dy = F.col("lat") - F.col("ay")
+    return dx * dx + dy * dy
+
+
+def _vertex_d2_np(lon, lat, ax, ay):
+    """NumPy twin of _vertex_d2_expr."""
+    dx = lon - ax
+    dy = lat - ay
+    return dx * dx + dy * dy
 
 
 def seg_d2_expr() -> Column:
@@ -397,6 +127,27 @@ def seg_d2_expr() -> Column:
     ex = px - t * dx
     ey = py - t * dy
     return ex * ex + ey * ey
+
+
+def _seg_d2_np(lon, lat, ax, ay, bx, by):
+    """NumPy twin of seg_d2_expr — identical op order, elementwise IEEE."""
+    dx = bx - ax
+    dy = by - ay
+    px = lon - ax
+    py = lat - ay
+    dot = px * dx + py * dy
+    len2 = dx * dx + dy * dy
+    with np.errstate(invalid="ignore", divide="ignore"):
+        t = np.where(dot <= 0.0, 0.0, np.where(dot >= len2, 1.0, dot / len2))
+    ex = px - t * dx
+    ey = py - t * dy
+    return ex * ex + ey * ey
+
+
+def _vertex_arrays(polygons: list[dict[str, Any]]):
+    """(pid, x, y) NumPy arrays of every ring vertex (closing duplicate
+    excluded): the segment starts, in the same pid-sorted order."""
+    return _segment_arrays(polygons)[:3]
 
 
 def _segment_arrays(polygons: list[dict[str, Any]]):
@@ -421,49 +172,108 @@ def _segment_arrays(polygons: list[dict[str, Any]]):
     )
 
 
-def _seg_d2_np(lon, lat, ax, ay, bx, by):
-    """NumPy twin of seg_d2_expr — identical op order, elementwise IEEE."""
-    dx = bx - ax
-    dy = by - ay
-    px = lon - ax
-    py = lat - ay
-    dot = px * dx + py * dy
-    len2 = dx * dx + dy * dy
-    with np.errstate(invalid="ignore", divide="ignore"):
-        t = np.where(dot <= 0.0, 0.0, np.where(dot >= len2, 1.0, dot / len2))
-    ex = px - t * dx
-    ey = py - t * dy
-    return ex * ex + ey * ey
+class _Metric(NamedTuple):
+    payload: tuple[str, ...]  # index columns the distance reads
+    d2_expr: Callable[[], Column]  # Spark d2 over (lon, lat, *payload)
+    d2_np: Callable[..., np.ndarray]  # its NumPy twin
+    arrays: Callable[[list[dict[str, Any]]], tuple]  # (pid, *payload) of a driver list
+    # finalization slack in cell units: 0 for exact vertices, 0.5 for
+    # segments sampled at spacing <= cell size (see _expansion_loop_k)
+    bound_margin: float
 
 
-def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
-    """(url, nearest poly_id, dist_sq) by exact scan over all SEGMENTS —
-    vectorized per Arrow batch; ties break to the smaller poly_id."""
-    pids, ax, ay, bx, by = _segment_arrays(polygons)
+_VERTEX = _Metric(("ax", "ay"), _vertex_d2_expr, _vertex_d2_np, _vertex_arrays, 0.0)
+_EDGE = _Metric(("ax", "ay", "bx", "by"), seg_d2_expr, _seg_d2_np, _segment_arrays, 0.5)
 
-    result_type = T.StructType(
-        [
-            T.StructField("poly_id", T.IntegerType()),
-            T.StructField("dist_sq", T.DoubleType()),
-        ]
+
+# ---------------------------------------------------------------------------
+# the index, the two exact scans and the expansion loop
+# ---------------------------------------------------------------------------
+
+
+def _polygon_table(spark: SparkSession, polygons: list[dict[str, Any]]) -> DataFrame:
+    """A driver polygon list as a (poly_id, ring) table for the index
+    builder. Plain createDataFrame, not literal_table: ring arrays as
+    struct literals bloat codegen, and the index is checkpointed once."""
+    rows = [
+        (int(p["poly_id"]), np.asarray(p["ring"], dtype=np.float64).tolist()) for p in polygons
+    ]
+    return spark.createDataFrame(rows, "poly_id int, ring array<array<double>>")
+
+
+def _index_from_table(polygons_df: DataFrame, m: _Metric) -> DataFrame:
+    """(vcell, poly_id, *m.payload) index rows from a polygons TABLE, all
+    codegen expressions — no UDF, no driver materialization, so the
+    polygon side can be millions of rows. Consecutive ring points zip into
+    segments (a, b). A vertex index registers each segment start (every
+    ring vertex, closing duplicate excluded) under its own cell; a segment
+    index registers each segment under the cells of sample points at
+    Euclidean spacing <= cell size. Sampling only drives candidate
+    generation — the reported distance is always exact — so its ceil()
+    needs no cross-engine determinism. poly_id is cast to int: _BEST_T's
+    fold zero hard-codes poly_id:int (an arrow-off session would otherwise
+    raise DATATYPE_MISMATCH.ARRAY_FUNCTION_DIFF_TYPES)."""
+    ring = F.col("ring")
+    segs = polygons_df.select(
+        F.col("poly_id").cast("int").alias("poly_id"),
+        F.explode(
+            F.zip_with(
+                F.slice(ring, 1, F.size(ring) - 1),
+                F.slice(ring, 2, F.size(ring) - 1),
+                lambda a, b: F.struct(
+                    a[0].alias("ax"), a[1].alias("ay"), b[0].alias("bx"), b[1].alias("by")
+                ),
+            )
+        ).alias("s"),
+    ).select("poly_id", "s.ax", "s.ay", "s.bx", "s.by")
+    ax, ay, bx, by = (F.col(c) for c in ("ax", "ay", "bx", "by"))
+    if not m.bound_margin:
+        return segs.select(
+            cellgrid.cell_id_col(ax, ay, KNN_RES).alias("vcell"), "poly_id", *m.payload
+        )
+    seg_len = F.sqrt((bx - ax) * (bx - ax) + (by - ay) * (by - ay))
+    size = F.lit(cellgrid.cell_size_deg(KNN_RES))
+    n = F.greatest(F.lit(1), F.ceil(seg_len / size).cast("int"))
+    sampled = segs.select(
+        "poly_id", *m.payload, F.explode(F.sequence(F.lit(0), n)).alias("j"), n.alias("n")
     )
+    t = F.col("j").cast("double") / F.col("n").cast("double")
+    cell = cellgrid.cell_id_col(ax + t * (bx - ax), ay + t * (by - ay), KNN_RES)
+    return sampled.select(cell.alias("vcell"), "poly_id", *m.payload).dropDuplicates()
 
-    @F.pandas_udf(result_type)
+
+def _index(polygons_df: DataFrame, m: _Metric) -> tuple[DataFrame, int]:
+    """The index, checkpointed once (it feeds every round plus the
+    fallback — fan-out audit rule), and its row count. Coalesced first:
+    the index inherits the polygons table's partitioning, which can be far
+    wider than the index warrants (a 64-part polygons scan would otherwise
+    spawn 64 near-empty tasks in EVERY round); defaultParallelism keeps
+    rounds at cluster width without a shuffle."""
+    parallelism = polygons_df.sparkSession.sparkContext.defaultParallelism
+    index = _index_from_table(polygons_df, m).coalesce(parallelism).localCheckpoint()
+    return index, index.count()
+
+
+def _nearest_scan(pages: DataFrame, polygons: list[dict[str, Any]], m: _Metric) -> DataFrame:
+    """(url, lat, lon, poly_id, dist_sq) by exact scan over every index
+    point of `polygons`, vectorized per Arrow batch. Index rows are
+    scanned in pid-sorted chunks, so per-batch memory stays O(batch_rows x
+    BRUTEFORCE_CHUNK) however many exist; argmin's first-occurrence rule
+    on the pid-sorted arrays plus the strict `<` merge give the
+    smallest-poly_id tie-break (the SQL oracle's row_number ordered by
+    dist_sq, poly_id)."""
+    pids, *cols = m.arrays(polygons)
+    d2_np = m.d2_np
+
+    @F.pandas_udf(_NEAREST_T)
     def nearest(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
         lon_np = lon.to_numpy(dtype=np.float64)[:, None]
         lat_np = lat.to_numpy(dtype=np.float64)[:, None]
         n = len(lon_np)
         best = np.full(n, np.inf)
         best_pid = np.full(n, -1, dtype=np.int64)
-        for s in range(0, len(ax), BRUTEFORCE_CHUNK):
-            d2 = _seg_d2_np(
-                lon_np,
-                lat_np,
-                ax[None, s : s + BRUTEFORCE_CHUNK],
-                ay[None, s : s + BRUTEFORCE_CHUNK],
-                bx[None, s : s + BRUTEFORCE_CHUNK],
-                by[None, s : s + BRUTEFORCE_CHUNK],
-            )
+        for s in range(0, len(pids), BRUTEFORCE_CHUNK):
+            d2 = d2_np(lon_np, lat_np, *(c[None, s : s + BRUTEFORCE_CHUNK] for c in cols))
             idx = d2.argmin(axis=1)
             dmin = d2[np.arange(n), idx]
             take = dmin < best
@@ -473,211 +283,316 @@ def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> Dat
 
     return pages.select(
         "url", "lat", "lon", nearest(F.col("lon"), F.col("lat")).alias("_nn")
-    ).select(
+    ).select("url", "lat", "lon", "_nn.poly_id", "_nn.dist_sq")
+
+
+def _top_k(pairs: DataFrame, keys: tuple[str, ...], k: int, alias: str) -> DataFrame:
+    """Per `keys` group, the k smallest (d2, poly_id) structs of `pairs`
+    after reducing to the per-polygon MIN — a polygon's many index rows
+    must never occupy more than one top-k slot. Both stages hash-aggregate;
+    a single min(struct) is sort-based in Spark and measured ~3x slower
+    at k = 1 on the 5,000-page table fast path."""
+    best = F.struct(F.col("d2"), F.col("poly_id"))
+    return (
+        pairs.groupBy(*keys, "poly_id")
+        .agg(F.min("d2").alias("d2"))
+        .groupBy(*keys)
+        .agg(F.slice(F.array_sort(F.collect_list(best)), 1, k).alias(alias))
+    )
+
+
+def _bruteforce_k(tail: DataFrame, index: DataFrame, m: _Metric, k: int) -> DataFrame:
+    """(url, lat, lon, best): exact k-nearest-polygon scan with the index
+    as a TABLE — broadcast the (small) page tail against every index
+    partition, then the per-url top-k. O(tail x index) work, data-parallel
+    over the index."""
+    t = tail.select("url", "lat", "lon")
+    pairs = index.crossJoin(F.broadcast(t)).withColumn("d2", m.d2_expr())
+    return _top_k(pairs, ("url", "lat", "lon"), k, "best")
+
+
+def _explode_best_k(df: DataFrame) -> DataFrame:
+    return df.select("url", "lat", "lon", F.posexplode("best")).select(
         "url",
         "lat",
         "lon",
-        F.col("_nn.poly_id").alias("poly_id"),
-        F.col("_nn.dist_sq").alias("dist_sq"),
+        (F.col("pos") + 1).cast("int").alias("rnk"),
+        F.col("col.poly_id").alias("poly_id"),
+        F.col("col.d2").alias("dist_sq"),
     )
 
 
-def segment_index_df(
-    spark: SparkSession, polygons: list[dict[str, Any]], res: int = KNN_RES
+def _topk_distinct_pid(best_col: str, cand_col: str, k: int):
+    """Merge two (d2, poly_id) struct arrays into the k smallest entries
+    with DISTINCT poly_ids, keyed by (d2, poly_id) ascending. The dedup is
+    an aggregate() fold over the sorted concat — the fold state `acc` is
+    lambda-local, so nothing outer re-evaluates per element (the HOF
+    re-inline trap), and the fold caps acc at k so work per row is O(k^2)
+    on arrays of at most 2k entries."""
+    return F.expr(
+        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, "
+        f"cast(array() as {_BEST_T})))), cast(array() as {_BEST_T}), "
+        f"(acc, x) -> CASE WHEN size(acc) >= {k} "
+        f"OR exists(acc, y -> y.poly_id = x.poly_id) "
+        f"THEN acc ELSE array_append(acc, x) END)"
+    )
+
+
+def _offsets(spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, int]:
+    """One-column (off bigint) table of the cell-id offsets in the
+    Chebyshev annulus lo <= max(|dx|, |dy|) <= hi, and its row count."""
+    offs = [
+        (dy * cellgrid._SHIFT + dx,)
+        for dx in range(-hi, hi + 1)
+        for dy in range(-hi, hi + 1)
+        if lo <= max(abs(dx), abs(dy)) <= hi
+    ]
+    return literal_table(spark, offs, "off bigint"), len(offs)
+
+
+def _expansion_loop_k(
+    pages: DataFrame,
+    index: DataFrame,
+    n_index: int,
+    m: _Metric,
+    windows: tuple[tuple[int, int], ...],
+    k: int,
+    out_cols: tuple[str, ...] = KNN_K_OUT_COLS,
+    fallback: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Segments indexed by the cells of sample points at Euclidean spacing
-    <= cell_size (the broadcast side). Sampling only drives candidate
-    generation — the reported distance is always the exact segment
-    distance — so the ceil() here needs no cross-engine determinism."""
-    import math
+    """The k nearest DISTINCT polygons per page, projected to `out_cols`
+    from (url, lat, lon, rnk, poly_id, dist_sq), rnk 1..k by (dist_sq,
+    poly_id).
 
-    size = cellgrid.cell_size_deg(res)
-    pids, ax, ay, bx, by = _segment_arrays(polygons)
-    rows_cell, rows = [], []
-    for i in range(len(pids)):
-        seg_len = math.hypot(bx[i] - ax[i], by[i] - ay[i])
-        n_samples = max(1, int(math.ceil(seg_len / size)))
-        seen = set()
-        for j in range(n_samples + 1):
-            t = j / n_samples
-            cell = int(
-                cellgrid.encode_np(
-                    np.array([ax[i] + t * (bx[i] - ax[i])]),
-                    np.array([ay[i] + t * (by[i] - ay[i])]),
-                    res,
-                )[0]
-            )
-            if cell not in seen:
-                seen.add(cell)
-                rows.append((cell, int(pids[i]), float(ax[i]), float(ay[i]), float(bx[i]), float(by[i])))
-    pdf = pd.DataFrame(rows, columns=["vcell", "poly_id", "ax", "ay", "bx", "by"])
-    pdf["poly_id"] = pdf["poly_id"].astype("int32")
-    # Explicit schema for the same arrow-off dtype-widening reason as
-    # vertex_index_df: poly_id must stay int to match _BEST_T's fold zero.
-    return spark.createDataFrame(
-        pdf, "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
+    Round r joins still-unresolved pages against the index over the
+    Chebyshev ring WINDOW [lo_r, hi_r]: the SMALL side explodes — every
+    index row is registered under each cell of the window's annulus — so
+    the page side stays one row per page with a plain equi-join, broadcast
+    while the expanded index is small and shuffle-joined on `cell` past
+    BROADCAST_INDEX_MAX_ROWS. Per-page state is one <= k struct array;
+    each round barriers on a localCheckpoint of the shrinking pending set.
+
+    A page finalizes once it holds k distinct polygons whose k-th distance
+    is STRICTLY under ((hi - margin) * cell_size)^2: any index point in an
+    unseen ring (Chebyshev > hi) is at least hi * size away, and for a
+    segment index sampled at Euclidean spacing <= cell_size an unseen
+    segment can still pass within (hi - 1/2) * size (every segment point
+    is within spacing/2 of a sample) — margin 0.5. So no unseen polygon
+    can enter the top k OR improve a reported distance; strict < keeps an
+    exactly-on-the-bound unseen polygon from stealing the k-th slot via
+    the poly_id tie-break.
+
+    Per round, candidates reduce to the per-(url, poly_id) MIN before the
+    per-url top-k, and the carried state merges by min-per-poly_id (a
+    later ring can re-surface an already-held polygon; the sorted-fold
+    dedup keeps the smaller key). Truncating each round's candidates to k
+    is lossless: a dropped entry is (d2, pid)-dominated by k distinct kept
+    polygons whose merged keys only ever improve.
+
+    Pages unresolved past the last window go to `fallback(tail)` (default:
+    the distributed exact scan), which returns a frame with `out_cols`."""
+    spark = pages.sparkSession
+    size = cellgrid.cell_size_deg(KNN_RES)
+    d2_expr = m.d2_expr()
+    if fallback is None:
+
+        def fallback(tail: DataFrame) -> DataFrame:
+            return _explode_best_k(_bruteforce_k(tail, index, m, k))
+
+    pending = (
+        pages.select("url", "lat", "lon")
+        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_RES))
+        .withColumn("best", F.expr(f"cast(array() as {_BEST_T})"))
     )
+    finalized: list[DataFrame] = []
 
-
-def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataFrame:
-    """Distributed segment index from a polygons TABLE: consecutive ring
-    points zipped into segments, sample offsets exploded with sequence(),
-    cells via the codegen cell expression — no UDF, no driver
-    materialization (the same scale shape as vertex_index_from_table)."""
-    ring = F.col("ring")
-    segs = F.zip_with(
-        F.slice(ring, 1, F.size(ring) - 1),
-        F.slice(ring, 2, F.size(ring) - 1),
-        lambda a, b: F.struct(
-            a[0].alias("ax"), a[1].alias("ay"), b[0].alias("bx"), b[1].alias("by")
-        ),
-    )
-    size = cellgrid.cell_size_deg(res)
-    seg_df = polygons_df.select(
-        F.col("poly_id").cast("int").alias("poly_id"), F.explode(segs).alias("s")
-    ).select("poly_id", "s.ax", "s.ay", "s.bx", "s.by")
-    dx = F.col("bx") - F.col("ax")
-    dy = F.col("by") - F.col("ay")
-    n_samples = F.greatest(
-        F.lit(1), F.ceil(F.sqrt(dx * dx + dy * dy) / F.lit(size)).cast("int")
-    )
-    sampled = seg_df.select(
-        "poly_id",
-        "ax",
-        "ay",
-        "bx",
-        "by",
-        F.explode(F.sequence(F.lit(0), n_samples)).alias("j"),
-        n_samples.alias("n"),
-    )
-    t = F.col("j").cast("double") / F.col("n").cast("double")
-    sx = F.col("ax") + t * (F.col("bx") - F.col("ax"))
-    sy = F.col("ay") + t * (F.col("by") - F.col("ay"))
-    return sampled.select(
-        cellgrid.cell_id_col(sx, sy, res).alias("vcell"),
-        "poly_id",
-        "ax",
-        "ay",
-        "bx",
-        "by",
-    ).dropDuplicates(["vcell", "poly_id", "ax", "ay", "bx", "by"])
-
-
-def knn_edge_bruteforce_distributed(pages: DataFrame, segs: DataFrame) -> DataFrame:
-    """Exact nearest-segment scan with the segment side as a TABLE:
-    broadcast the (small) page tail against every segment partition, then
-    one min-by aggregation — the edge twin of knn_bruteforce_distributed."""
-    tail = pages.select("url", "lat", "lon")
-    return (
-        segs.crossJoin(F.broadcast(tail))
-        .select("url", "lat", "lon", "poly_id", seg_d2_expr().alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.first("lat").alias("lat"),
-            F.first("lon").alias("lon"),
-            F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"),
+    for lo, hi in windows:
+        off_df, n_offsets = _offsets(spark, lo, hi)
+        vwin = index.crossJoin(off_df).select(
+            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *m.payload
         )
-        .select(
-            "url",
-            "lat",
-            "lon",
-            F.col("_b.poly_id").alias("poly_id"),
-            F.col("_b.d2").alias("dist_sq"),
+        if n_index * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
+            vwin = F.broadcast(vwin)
+        pairs = (
+            pending.select("url", "lat", "lon", "cell").join(vwin, "cell").withColumn("d2", d2_expr)
         )
+        merged = pending.join(_top_k(pairs, ("url",), k, "cbest"), "url", "left").select(
+            "url", "lat", "lon", "cell", _topk_distinct_pid("best", "cbest", k).alias("best")
+        )
+        bound = float(((hi - m.bound_margin) * size) * ((hi - m.bound_margin) * size))
+        guarantee = (F.size("best") >= k) & (F.element_at("best", k)["d2"] < F.lit(bound))
+        finalized.append(_explode_best_k(merged.where(guarantee)).select(*out_cols))
+        pending = merged.where(~guarantee).localCheckpoint()
+        if pending.isEmpty():
+            break
+    else:
+        # pages with too few polygons within the last window (or no windows)
+        finalized.append(fallback(pending).select(*out_cols))
+
+    return reduce(DataFrame.unionByName, finalized)
+
+
+def _is_small(pages: DataFrame, n_index: int, small_input_rows: int) -> bool:
+    """Tiny-input fast-path gate (see SMALL_INPUT_ROWS); 0 turns it off."""
+    return bool(
+        small_input_rows
+        and n_index <= SMALL_INDEX_VERTICES
+        and pages.select("url").limit(small_input_rows + 1).count() <= small_input_rows
     )
 
 
-_SEG_PAYLOAD = ("ax", "ay", "bx", "by")
+def _nearest_from_list(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]],
+    m: _Metric,
+    windows: tuple[tuple[int, int], ...],
+    small_input_rows: int,
+) -> DataFrame:
+    """k = 1 over a driver polygon list: tiny inputs and the loop's tail
+    take the NumPy scan (same tie-break contract, no loop barriers)."""
+
+    def exact(df: DataFrame) -> DataFrame:
+        return _nearest_scan(df, polygons, m)
+
+    if _is_small(pages, sum(len(p["ring"]) - 1 for p in polygons), small_input_rows):
+        return exact(pages)
+    index, n_index = _index(_polygon_table(pages.sparkSession, polygons), m)
+    return _expansion_loop_k(pages, index, n_index, m, windows, 1, OUT_COLS, exact)
+
+
+def _nearest_from_table(
+    pages: DataFrame, polygons_df: DataFrame, m: _Metric, windows: tuple[tuple[int, int], ...]
+) -> DataFrame:
+    """k = 1 with the polygon side as a TABLE end to end: nothing
+    polygon-shaped touches the driver; tiny inputs and the loop's tail
+    take the distributed exact scan."""
+    index, n_index = _index(polygons_df, m)
+    if _is_small(pages, n_index, SMALL_INPUT_ROWS):
+        return _explode_best_k(_bruteforce_k(pages, index, m, 1)).select(*OUT_COLS)
+    return _expansion_loop_k(pages, index, n_index, m, windows, 1, OUT_COLS)
+
+
+def _knn_k(
+    pages: DataFrame,
+    polygons_df: DataFrame,
+    m: _Metric,
+    k: int,
+    windows: tuple[tuple[int, int], ...],
+) -> DataFrame:
+    index, n_index = _index(polygons_df, m)
+    return _expansion_loop_k(pages, index, n_index, m, windows, k)
+
+
+# ---------------------------------------------------------------------------
+# public polygon-kNN entry points
+# ---------------------------------------------------------------------------
+
+
+def knn_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
+    """(url, lat, lon, nearest poly_id, dist_sq) by exact scan over all
+    vertices; ties break to the smaller poly_id."""
+    return _nearest_scan(pages, polygons, _VERTEX)
+
+
+def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
+    """(url, lat, lon, nearest poly_id, dist_sq) by exact scan over all
+    SEGMENTS; ties break to the smaller poly_id."""
+    return _nearest_scan(pages, polygons, _EDGE)
+
+
+def knn_ring_expansion(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]],
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+    small_input_rows: int = SMALL_INPUT_ROWS,
+) -> DataFrame:
+    """(url, lat, lon, poly_id, dist_sq): nearest polygon by VERTEX
+    distance via cell-ring expansion (_expansion_loop_k at k = 1). Set
+    small_input_rows=0 to force the loop past the tiny-input fast path.
+    For very dense vertex sets, more geometric windows bound per-round
+    candidate fan-out."""
+    return _nearest_from_list(pages, polygons, _VERTEX, windows, small_input_rows)
+
+
+def knn_ring_expansion_table(
+    pages: DataFrame, polygons_df: DataFrame, windows: tuple[tuple[int, int], ...] = WINDOWS
+) -> DataFrame:
+    """knn_ring_expansion with the polygon side as a TABLE end to end, so
+    it scales to millions of polygon rows. Same rows."""
+    return _nearest_from_table(pages, polygons_df, _VERTEX, windows)
 
 
 def knn_edge_ring_expansion(
     pages: DataFrame,
     polygons: list[dict[str, Any]],
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
     small_input_rows: int = SMALL_INPUT_ROWS,
 ) -> DataFrame:
-    """(url, poly_id, dist_sq) with EXACT point-to-segment distance via the
-    shared ring-expansion loop over a sampled segment index (see module
-    docstring; bound_margin=0.5 accounts for the <= cell_size sampling)."""
-    spark = pages.sparkSession
-    n_segments = sum(len(p["ring"]) - 1 for p in polygons)
-
-    if small_input_rows and n_segments <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(small_input_rows + 1).count()
-        if probe <= small_input_rows:
-            return knn_edge_bruteforce(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    sindex = segment_index_df(spark, polygons, res)
-    n_index = sindex.count()
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_edge_bruteforce(tail.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    return _expansion_loop(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        fallback,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
+    """(url, lat, lon, poly_id, dist_sq) with EXACT point-to-segment
+    distance via the ring-expansion loop over a sampled segment index."""
+    return _nearest_from_list(pages, polygons, _EDGE, windows, small_input_rows)
 
 
 def knn_edge_ring_expansion_table(
+    pages: DataFrame, polygons_df: DataFrame, windows: tuple[tuple[int, int], ...] = WINDOWS
+) -> DataFrame:
+    """knn_edge_ring_expansion with the polygon side as a TABLE end to
+    end. Same rows."""
+    return _nearest_from_table(pages, polygons_df, _EDGE, windows)
+
+
+def knn_k(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]],
+    k: int = 3,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+) -> DataFrame:
+    """k nearest DISTINCT airspaces per page by VERTEX distance (url, rnk,
+    poly_id, dist_sq)."""
+    return _knn_k(pages, _polygon_table(pages.sparkSession, polygons), _VERTEX, k, windows)
+
+
+def knn_edge_k(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]],
+    k: int = 3,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+) -> DataFrame:
+    """k nearest DISTINCT airspaces per page by EXACT point-to-segment
+    distance (url, rnk, poly_id, dist_sq)."""
+    return _knn_k(pages, _polygon_table(pages.sparkSession, polygons), _EDGE, k, windows)
+
+
+def knn_table_k(
     pages: DataFrame,
     polygons_df: DataFrame,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
+    k: int = 3,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
 ) -> DataFrame:
-    """Edge-exact kNN with the polygon side as a TABLE end to end: segment
-    index built by distributed zip/explode + codegen cell encode, tail scan
-    over the segment TABLE — nothing polygon-shaped on the driver. Same
-    rows as knn_edge_ring_expansion (distance + tie-break contract shared)."""
-    sindex = (
-        segment_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_index = sindex.count()
+    """knn_k with the polygon side as a TABLE end to end."""
+    return _knn_k(pages, polygons_df, _VERTEX, k, windows)
 
-    if n_index <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(SMALL_INPUT_ROWS + 1).count()
-        if probe <= SMALL_INPUT_ROWS:
-            return knn_edge_bruteforce_distributed(pages, sindex).select(*OUT_COLS)
 
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_edge_bruteforce_distributed(tail, sindex).select(*OUT_COLS)
-
-    return _expansion_loop(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        fallback,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
+def knn_edge_table_k(
+    pages: DataFrame,
+    polygons_df: DataFrame,
+    k: int = 3,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+) -> DataFrame:
+    """knn_edge_k with the polygon side as a TABLE end to end."""
+    return _knn_k(pages, polygons_df, _EDGE, k, windows)
 
 
 # ---------------------------------------------------------------------------
 # point-point kNN: the k nearest OTHER pages for each sampled query page
 # ---------------------------------------------------------------------------
 
-KNN_POINTS_RES = 6  # ~5.6 deg cells — sized for geotag density, tunable
-
 
 def knn_points(
     pages: DataFrame,
     k: int = 8,
     query_mod: int = 7,
-    res: int = KNN_POINTS_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
 ) -> DataFrame:
     """(url, rnk, neighbor, dist_sq): the k nearest OTHER pages for each
     deterministically md5-sampled query page, planar squared-degree
@@ -704,6 +619,7 @@ def knn_points(
     aliased off-grid ids either match nothing or contribute far candidates
     that lose the top-k."""
     spark = pages.sparkSession
+    res = KNN_POINTS_RES
     size = cellgrid.cell_size_deg(res)
     best_t = "array<struct<d2:double,nid:string>>"
     points = (
@@ -736,21 +652,13 @@ def knn_points(
 
     for lo, hi in windows:
         n_pending = pending.count()
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
+        off_df, n_offsets = _offsets(spark, lo, hi)
         qx = (
             pending.select("url", "lat", "lon", "qcell")
             .crossJoin(off_df)
             .select("url", "lat", "lon", (F.col("qcell") + F.col("off")).alias("pcell"))
         )
-        if n_pending * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
+        if n_pending * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
             qx = F.broadcast(qx)
         cand = (
             points.join(qx, "pcell")
@@ -770,7 +678,10 @@ def knn_points(
             "qcell",
             F.slice(
                 F.array_sort(
-                    F.concat(F.col("best"), F.coalesce(F.col("cbest"), F.expr(f"CAST(array() AS {best_t})")))
+                    F.concat(
+                        F.col("best"),
+                        F.coalesce(F.col("cbest"), F.expr(f"CAST(array() AS {best_t})")),
+                    )
                 ),
                 1,
                 k,
@@ -781,10 +692,8 @@ def knn_points(
         finalized.append(explode_best(merged.where(guarantee)))
         pending = merged.where(~guarantee).localCheckpoint()
         if pending.isEmpty():
-            pending = None
             break
-
-    if pending is not None and not pending.isEmpty():
+    else:
         # exact scan for the stragglers: all points, same top-k contract
         tail = (
             points.crossJoin(F.broadcast(pending.select("url", "lat", "lon")))
@@ -799,258 +708,4 @@ def knn_points(
         )
         finalized.append(explode_best(tail))
 
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# k > 1 polygon kNN (r4 VERDICT item 3): k nearest DISTINCT airspaces
-# ---------------------------------------------------------------------------
-
-KNN_K_OUT_COLS = ("url", "rnk", "poly_id", "dist_sq")
-_BEST_T = "array<struct<d2:double,poly_id:int>>"
-
-
-def _explode_best_k(df: DataFrame) -> DataFrame:
-    return df.select("url", F.posexplode("best")).select(
-        "url",
-        (F.col("pos") + 1).cast("int").alias("rnk"),
-        F.col("col.poly_id").alias("poly_id"),
-        F.col("col.d2").alias("dist_sq"),
-    )
-
-
-def _topk_distinct_pid(best_col: str, cand_col: str, k: int):
-    """Merge two (d2, poly_id) struct arrays into the k smallest entries
-    with DISTINCT poly_ids, keyed by (d2, poly_id) ascending. The dedup is
-    an aggregate() fold over the sorted concat — the fold state `acc` is
-    lambda-local, so nothing outer re-evaluates per element (the HOF
-    re-inline trap), and the fold caps acc at k so work per row is O(k^2)
-    on arrays of at most 2k entries."""
-    return F.expr(
-        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, "
-        f"cast(array() as {_BEST_T})))), cast(array() as {_BEST_T}), "
-        f"(acc, x) -> CASE WHEN size(acc) >= {k} "
-        f"OR exists(acc, y -> y.poly_id = x.poly_id) "
-        f"THEN acc ELSE array_append(acc, x) END)"
-    )
-
-
-def _bruteforce_k(tail: DataFrame, vindex: DataFrame, d2_expr: Column, k: int) -> DataFrame:
-    """Exact k-nearest-polygon scan for the expansion stragglers: broadcast
-    the (small) tail against every index partition, reduce to the per
-    (url, poly_id) MIN first — a polygon's many index rows must never
-    occupy more than one top-k slot — then one per-url top-k."""
-    t = tail.select("url", "lat", "lon")
-    return (
-        vindex.crossJoin(F.broadcast(t))
-        .withColumn("d2", d2_expr)
-        .groupBy("url", "poly_id")
-        .agg(F.min("d2").alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))), 1, k
-            ).alias("best")
-        )
-    )
-
-
-def _expansion_loop_k(
-    pages: DataFrame,
-    vindex: DataFrame,
-    n_index: int,
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    k: int,
-    payload_cols: tuple[str, ...] = ("vlon", "vlat"),
-    d2_expr: Column | None = None,
-    bound_margin: float = 0.0,
-) -> DataFrame:
-    """Ring-expansion generalized from nearest-1 to the k nearest DISTINCT
-    polygons per page (url, rnk, poly_id, dist_sq), rnk 1..k by (dist_sq,
-    poly_id).
-
-    The single-best guarantee generalizes to the K-TH best: a page
-    finalizes once it holds k distinct polygons whose k-th distance is
-    STRICTLY under ((hi - margin) * cell_size)^2 — any index point in an
-    unseen ring (Chebyshev > hi) is at least (hi - margin) * size away
-    (margin 0.5 for sampled-segment indexes, see _expansion_loop), so no
-    unseen point can enter the top k OR improve any reported polygon's
-    distance; strict < keeps an exactly-on-the-bound unseen polygon from
-    stealing the k-th slot via the poly_id tie-break.
-
-    Per round, candidates reduce to the per-(url, poly_id) MIN before the
-    per-url top-k (a polygon's many vertices must fill one slot, not k),
-    and the carried state merges by min-per-poly_id (a later ring can
-    re-surface an already-held polygon; the sorted-fold dedup keeps the
-    smaller key). Truncating each round's candidates to k is lossless: a
-    dropped entry is (d2, pid)-dominated by k distinct kept polygons whose
-    merged keys only ever improve.
-
-    Scale shape matches _expansion_loop: the index side explodes across
-    the window annulus (pages never explode), broadcast while small,
-    shuffle-join past BROADCAST_INDEX_MAX_ROWS; per-page state is one
-    <= k struct array; each round barriers on a localCheckpoint of the
-    shrinking pending set."""
-    spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
-    if d2_expr is None:
-        d2_expr = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-            F.col("lat") - F.col("vlat")
-        ) * (F.col("lat") - F.col("vlat"))
-
-    pending = (
-        pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-        .withColumn("best", F.expr(f"cast(array() as {_BEST_T})"))
-    )
-    finalized: list[DataFrame] = []
-
-    for lo, hi in windows:
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
-        vwin = vindex.crossJoin(off_df).select(
-            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *payload_cols
-        )
-        if n_index * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
-            vwin = F.broadcast(vwin)
-        cand = (
-            pending.select("url", "lat", "lon", "cell")
-            .join(vwin, "cell")
-            .withColumn("d2", d2_expr)
-            .groupBy("url", "poly_id")
-            .agg(F.min("d2").alias("d2"))
-            .groupBy("url")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))),
-                    1,
-                    k,
-                ).alias("cbest")
-            )
-        )
-        merged = pending.join(cand, "url", "left").select(
-            "url",
-            "lat",
-            "lon",
-            "cell",
-            _topk_distinct_pid("best", "cbest", k).alias("best"),
-        )
-        bound = float(((hi - bound_margin) * size) * ((hi - bound_margin) * size))
-        guarantee = (F.size("best") >= k) & (
-            F.element_at("best", k)["d2"] < F.lit(bound)
-        )
-        finalized.append(_explode_best_k(merged.where(guarantee)))
-        pending = merged.where(~guarantee).localCheckpoint()
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None and not pending.isEmpty():
-        finalized.append(_explode_best_k(_bruteforce_k(pending, vindex, d2_expr, k)))
-
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def knn_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """k nearest airspaces per page by VERTEX distance (url, rnk, poly_id,
-    dist_sq) — knn_ring_expansion generalized to k > 1."""
-    spark = pages.sparkSession
-    vindex = vertex_index_df(spark, polygons, res)
-    n_vertices = sum(len(p["ring"]) - 1 for p in polygons)
-    return _expansion_loop_k(pages, vindex, n_vertices, res, windows, k)
-
-
-def knn_edge_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """k nearest airspaces per page by EXACT point-to-segment distance —
-    knn_edge_ring_expansion generalized to k > 1 (sampling drives
-    candidates only; reported distances are the exact clamped projection;
-    bound_margin 0.5 covers the <= cell_size sample spacing)."""
-    spark = pages.sparkSession
-    sindex = segment_index_df(spark, polygons, res)
-    n_index = sindex.count()
-    return _expansion_loop_k(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        k,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
-
-
-def knn_table_k(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """knn_k with the polygon side as a TABLE end to end (distributed
-    vertex index, nothing polygon-shaped on the driver — the 100-TB
-    shape). The index feeds every round plus the fallback, so it is
-    checkpointed once (fan-out audit rule)."""
-    vindex = (
-        vertex_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_vertices = vindex.count()
-    return _expansion_loop_k(pages, vindex, n_vertices, res, windows, k)
-
-
-def knn_edge_table_k(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """knn_edge_k with the polygon side as a TABLE end to end (distributed
-    zip/explode segment index — nothing polygon-shaped on the driver).
-    Checkpointed once: the index feeds every round plus the fallback."""
-    sindex = (
-        segment_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_index = sindex.count()
-    return _expansion_loop_k(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        k,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
+    return reduce(DataFrame.unionByName, finalized)

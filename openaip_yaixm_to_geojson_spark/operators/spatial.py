@@ -325,13 +325,15 @@ def spatial_join_compact(
     The point side probes one cell id per resolution level (explode x
     (res_max - res_min + 1) before the broadcast join); the cover's
     regions are disjoint so each point still matches a polygon at most
-    once, and points landing in `full` cells skip the PIP UDF entirely —
-    only boundary-cell candidates pay the Arrow hop. Same rows as
-    spatial_join. Choose this over the uniform cover when polygon AREA
-    (broadcast bytes) is the bottleneck — a 1.5-deg polygon's cover drops
-    7.2x — NOT for wall time at small cover sizes: measured at 8M docs
-    against one large polygon, the PIP-skip gain roughly cancels the
-    (res_max - res_min + 1)x point-side probe fan-out (2.3s vs 2.2s)."""
+    once. Same rows as spatial_join. The `full OR pip(...)` filter does
+    NOT spare interior candidates the PIP UDF: Spark extracts the pandas
+    UDF out of the OR, so ArrowEvalPython evaluates every candidate,
+    `full` ones included (measured at 200k pages: all 33,118 candidates,
+    12% of them interior). Choose this over the uniform cover when
+    polygon AREA (broadcast bytes) is the bottleneck — a 1.5-deg
+    polygon's cover drops 7.2x — NOT for wall time: measured at 8M docs
+    against one large polygon, the (res_max - res_min + 1)x point-side
+    probe fan-out is not repaid (2.3s vs 2.2s)."""
     spark = pages.sparkSession
     cover = compact_cover_df(spark, polygons, res_min, res_max)
     levels = [
@@ -398,8 +400,8 @@ def spatial_join_compact_table(
     """spatial_join_compact with the polygon side as a TABLE end to end:
     compacted cover via distributed pandas-UDF compaction + explode, PIP
     rings attached by a poly_id join — nothing polygon-shaped on the
-    driver. `full`-cell candidates skip the PIP refine exactly like the
-    driver-list variant; same rows as spatial_join."""
+    driver. As in the driver-list variant, every candidate goes through
+    the PIP UDF, `full` ones included; same rows as spatial_join."""
     cover = compact_cover_distributed(polygons_df, res_min, res_max).select(
         "cell", "full", "poly_id"
     )

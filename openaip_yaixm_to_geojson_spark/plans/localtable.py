@@ -40,7 +40,9 @@ def literal_table(
 ) -> DataFrame:
     """rows + StructType (or DDL string) -> DataFrame with the schema's
     exact field names/types, built so that re-evaluation costs no Python
-    tasks. Falls back to createDataFrame for empty input."""
+    tasks. Falls back to createDataFrame for empty input. Raises
+    ValueError when a nullable=False field gets None, rather than letting
+    a null reach a column the schema declares non-null."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     rows = list(rows)
@@ -50,6 +52,10 @@ def literal_table(
 
     def cell_value(row, i, f):
         return row[f.name] if isinstance(row, dict) else row[i]
+
+    for i, f in enumerate(fields):
+        if not f.nullable and any(cell_value(row, i, f) is None for row in rows):
+            raise ValueError(f"literal_table: non-nullable field {f.name!r} got None")
 
     if len(rows) <= max_literal_rows:
         structs = [

@@ -74,11 +74,14 @@ def test_text_byte_identical_through_join(spark, polygons):
         assert row["text"].encode("utf-8") == source[row["url"]].encode("utf-8")
 
 
-def test_knn_ring_expansion_matches_bruteforce(spark, polygons):
+def test_knn_ring_expansion_matches_bruteforce(spark, polygons, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_bruteforce,
         knn_ring_expansion,
+        knn_ring_expansion_table,
     )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
@@ -95,6 +98,20 @@ def test_knn_ring_expansion_matches_bruteforce(spark, polygons):
     # the fast path (default gates) returns the identical mapping
     fast = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_ring_expansion(pages, polygons).collect()}
     assert fast == brute
+    # the table variant: default gates (fast path), then the loop forced by
+    # a zero fast-path threshold
+    polygons_df = polygons_to_df(spark, polygons)
+    tab_fast = {
+        r["url"]: (r["poly_id"], r["dist_sq"])
+        for r in knn_ring_expansion_table(pages, polygons_df).collect()
+    }
+    assert tab_fast == brute
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+    tab_loop = {
+        r["url"]: (r["poly_id"], r["dist_sq"])
+        for r in knn_ring_expansion_table(pages, polygons_df).collect()
+    }
+    assert tab_loop == brute
 
 
 def test_tile_rollup_counts(spark, polygons):
@@ -494,9 +511,10 @@ def test_tile_vector_export_bounds_match_cellgrid(spark):
         assert cellgrid.decode(r["tile_id"])[0] == DEFAULT_TILE_RES
 
 
-def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
+def test_knn_edge_expansion_matches_bruteforce(spark, polygons, monkeypatch):
     """Edge-exact kNN: forced expansion loop (driver-list AND table index)
     == exhaustive segment scan, bit-for-bit including tie-breaks."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_edge_bruteforce,
         knn_edge_ring_expansion,
@@ -515,11 +533,19 @@ def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
         for r in knn_edge_ring_expansion(pages, polygons, small_input_rows=0).collect()
     }
     assert loop == brute
+    polygons_df = polygons_to_df(spark, polygons)
     tab = {
         r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_edge_ring_expansion_table(pages, polygons_to_df(spark, polygons)).collect()
+        for r in knn_edge_ring_expansion_table(pages, polygons_df).collect()
     }
     assert tab == brute
+    # a zero fast-path threshold forces the table variant through the loop
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+    tab_loop = {
+        r["url"]: (r["poly_id"], r["dist_sq"])
+        for r in knn_edge_ring_expansion_table(pages, polygons_df).collect()
+    }
+    assert tab_loop == brute
 
 
 def test_knn_edge_vs_vertex_pick_different_polygons(spark):

@@ -95,37 +95,44 @@ def main() -> None:
     section(
         "spatial join (quadtree-compact cover)",
         "Mixed-res cover: the point side probes one codegen cell id per "
-        "level (Generate = the explode), interior `full` candidates skip "
-        "PIP via the OR predicate; broadcast join, zero fact shuffles.",
+        "level (Generate = the explode); broadcast join, zero fact shuffles. "
+        "Interior `full` candidates do NOT skip PIP: Spark pulls the pandas "
+        "UDF out of `full OR pip(...)`, so ArrowEvalPython sees every "
+        "candidate.",
         spatial_join_compact(pages, polys),
     )
     from openaip_yaixm_to_geojson_spark.operators.knn import (
-        knn_bruteforce_distributed,
-        vertex_index_from_table,
+        _VERTEX,
+        _bruteforce_k,
+        _index_from_table,
     )
     from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join_compact_table
 
     section(
         "spatial join (compact cover, polygon-table path)",
         "Quadtree compaction runs as a pandas UDF per polygon ROW (explode "
-        "after), rings attach via broadcast poly_id join; `full` candidates "
-        "skip PIP. Nothing polygon-shaped on the driver.",
+        "after), rings attach via broadcast poly_id join. Nothing "
+        "polygon-shaped on the driver. As in the driver-list variant, "
+        "ArrowEvalPython sees every candidate, `full` ones included.",
         spatial_join_compact_table(pages, polygons_to_df(spark, polys)),
     )
     section(
         "kNN vertex index from a polygons TABLE",
-        "Ring explode + codegen cell encode: the index builder the "
-        "polygon-table kNN uses — all JVM expressions, no UDF, no driver "
-        "materialization.",
-        vertex_index_from_table(polygons_to_df(spark, polys)),
+        "Ring zip/explode + codegen cell encode: the one index builder every "
+        "polygon kNN uses (a driver list becomes a table first) — all JVM "
+        "expressions, no UDF, no driver materialization.",
+        _index_from_table(polygons_to_df(spark, polys), _VERTEX),
     )
     section(
         "kNN exact fallback over the vertex TABLE",
         "Broadcast the (small) unresolved page tail across vertex "
-        "partitions; one min-by aggregation. O(tail x vertices), "
-        "data-parallel over the vertex set.",
-        knn_bruteforce_distributed(
-            pages.limit(10), vertex_index_from_table(polygons_to_df(spark, polys))
+        "partitions; per-(url, poly_id) MIN, then the per-url top-k (k = 1 "
+        "here). O(tail x vertices), data-parallel over the vertex set.",
+        _bruteforce_k(
+            pages.limit(10),
+            _index_from_table(polygons_to_df(spark, polys), _VERTEX),
+            _VERTEX,
+            1,
         ),
     )
     from openaip_yaixm_to_geojson_spark.operators.web import (

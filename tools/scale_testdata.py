@@ -115,6 +115,13 @@ def main() -> None:
     src = Path(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1")
     dst = Path(sys.argv[2] if len(sys.argv) > 2 else "/root/testdata_x10/sf1.0x")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    if factor < 2:
+        sys.exit(f"factor must be >= 2 (got {factor}): copy 0 is the source itself")
+    if "n_chars" not in pq.read_schema(src / "documents.parquet").names:
+        sys.exit(
+            f"{src / 'documents.parquet'} has no n_chars column: "
+            "the copies carry one, so the source must too"
+        )
     dst.mkdir(parents=True, exist_ok=True)
     scale_documents(src, dst, factor)
     scale_events(src, dst, factor)
